@@ -18,16 +18,17 @@ import graft.model.INF
   * equi-join + min aggregation; the `Pair` WritableComparable + custom
   * partitioner + LinkedHashMap secondary sort becomes
   * `groupBy.agg(sort_array(collect_list(...)))`; the Hadoop counter becomes
-  * a `count()` on the checkpointed state; the per-round HDFS round-trip
-  * becomes `localCheckpoint`.
+  * a scalar riding the round's single action; the per-round HDFS
+  * round-trip becomes a persisted RDD round, freed once its successor is
+  * materialized.
   *
   * Scale notes (100 TB): all aggregations here are hash-aggregatable with
   * map-side partial aggregation (the reference never wrote a combiner —
   * `setCombinerClass` is absent — so Spark is strictly better); the SSSP
-  * loop's only per-round shuffles are the frontier⋈edges join and the
-  * min-agg, both on a single long key, skew-handled by AQE; the edge table
-  * is shuffled once (`repartition($"src")`) and that partitioning is reused
-  * by every round's join.
+  * loop's only per-round shuffle is the min-combine of the frontier's
+  * messages, on a single long key; the edge table is shuffled once
+  * (`partitionBy` on src) and that layout is reused by every round's
+  * co-partitioned probe.
   */
 object GraphOps {
 
@@ -154,14 +155,14 @@ object GraphOps {
     * Reference: the driver loop at `SingleSourceSP.java:439-519` submits
     * one full MR job per round, round-tripping the entire node state
     * through HDFS (`:513-517`) and reading a Hadoop counter for
-    * convergence (`:473-479`). Here the loop is the incremental
-    * [[deltaLoop]]: per round only the small per-round delta (the
-    * frontier's out-neighborhood) is shuffled, checkpointed, and counted;
-    * the full |V|-row state is rewritten only at periodic fold points —
-    * the property that makes long-tail convergence (many rounds, tiny
-    * frontiers, exactly what a power-law graph produces at scale)
-    * affordable. Loop shuffle parallelism scales with the edge count
-    * ([[loopPartitions]]).
+    * convergence (`:473-479`). Here each round is one RDD job over a
+    * patch of the rows relaxed so far, co-partitioned with the edges:
+    * only the frontier's out-neighborhood is shuffled, the changed-row
+    * count rides the round's single action, and the full |V|-row base
+    * is read once, at the end — the property that makes long-tail
+    * convergence (many rounds, tiny frontiers, exactly what a power-law
+    * graph produces at scale) affordable. Loop shuffle parallelism
+    * scales with the edge count ([[loopPartitions]]).
     *
     * `maxRounds` bounds the loop at |V|−1 (Bellman-Ford guarantee for
     * non-negative weights) as a safety net against pathological input.
@@ -227,10 +228,9 @@ object GraphOps {
         // beat the state only generates dominated hop-2 candidates, which
         // the single merge-min discards; a node first reached at hop 1
         // improves by definition (INF before), so its hop-2 fan-out uses
-        // the improved value. The DF loop's fuse was a measured LOSS
-        // (3^depth Catalyst re-evaluation, see [[BatchBelowRows]]); here
-        // each hop is a shuffle boundary, so a fused pair costs two
-        // shuffles and ONE dispatch/merge/readout instead of two of each.
+        // the improved value. Each hop is a shuffle boundary, so a fused
+        // pair re-evaluates nothing: it costs two shuffles and ONE
+        // dispatch/merge/readout instead of two of each.
         // 13 of sssp_lineitem's 21 rounds sit below 4096 changed rows.
         val hops = if (changedCount < RddFuseBelowRows && bound - rounds >= 2) 2L else 1L
         rounds += hops
@@ -298,35 +298,6 @@ object GraphOps {
     }
   }
 
-  /** One relaxation round in delta form: only the rows that RECEIVE a
-    * message this round, with their improved distance (null when the
-    * message does not improve — those rows still matter: first contact
-    * sets `reached`, SURVEY.md Q2/Q4). Same semantics as [[ssspRound]],
-    * proven by the shared oracle queries; the difference is purely
-    * physical — per-round cost is O(frontier out-neighborhood), not O(|V|).
-    *
-    * Exchange audit (the plan you want at 100 TB): the frontier comes
-    * from the small patch (hash-partitioned on id), edges are
-    * pre-partitioned on src → the relax join needs NO exchange; the
-    * min-combine shuffles only the candidate messages; the dist-compare
-    * join streams the state exactly once (no exchange — AQE broadcasts
-    * the small best side).
-    */
-  def ssspDelta(cur: DataFrame, frontier: DataFrame, edges: DataFrame): DataFrame = {
-    val f = frontier.filter(col("dist") =!= INF).alias("f")
-    val best = f
-      .join(edges.alias("e"), col("f.id") === col("e.src"))
-      .select(col("e.dst").as("id"), (col("f.dist") + col("e.w")).as("cand"))
-      .groupBy("id")
-      .agg(min(col("cand")).as("best"))
-    cur
-      .select(col("id"), col("dist"))
-      .alias("s")
-      .join(best.alias("b"), Seq("id"))
-      .select(col("id"), when(col("b.best") < col("s.dist"), col("b.best")).as("newval"))
-      .withColumn("improved", col("newval").isNotNull)
-  }
-
   /** Final-result projection (the reference's `JobSeq=Last` pass,
     * `SingleSourceSP.java:285-288,484-508`): `(source, id, dist)`,
     * adjacency and flag dropped.
@@ -334,43 +305,15 @@ object GraphOps {
   def finalResult(state: DataFrame, source: Long): DataFrame =
     state.select(lit(source).as("source"), col("id"), col("dist"))
 
-  /** Never broadcast a patch above this many rows, whatever the
-    * fold-fraction says — a driver is not sized for gigarow builds.
-    */
-  private val BroadcastRowCap = 4000000L
-
-  /** Frontier size below which two sub-rounds fuse into one
-    * materialization (see the batching note in [[patchLoop]]). DEFAULT 0
-    * = never fuse: measured per-round debug shows a fused round costs
-    * 1.9–5.4 s against 0.3–0.5 s unfused EVEN ON 14-ROW PATCHES
-    * (sssp_layered 11.1 s fused vs 4.3 s unfused end-to-end) — the
-    * doubled plan depth's planning/codegen plus the ~3× re-evaluation
-    * of the unmaterialized intermediate swamp the one job dispatch a
-    * fuse saves, because in local mode planning IS the per-round floor.
-    * The knob stays for cluster profiles where dispatch latency (queue
-    * waits, 1 s+ scheduling) dominates planning; set GRAFT_BATCH_BELOW
-    * to a small frontier bound to re-enable.
-    */
-  private val BatchBelowRows =
-    sys.env.get("GRAFT_BATCH_BELOW").map(_.toLong).getOrElse(0L)
-
   /** RDD-loop double-hop fuse bound (the [[sssp]] tiny-frontier batch):
-    * frontiers below this relax two hops per job. Unlike the DataFrame
-    * fuse (see [[BatchBelowRows]] — a measured loss from Catalyst
-    * re-evaluation), an RDD hop is a shuffle boundary, so fusing pays
-    * only the second hop's extra candidate fan-out — bounded by the
-    * fuse threshold times the frontier's 2-hop out-degree, KBs at the
-    * tail this targets. Env-overridable for cluster profiles.
+    * frontiers below this relax two hops per job. An RDD hop is a
+    * shuffle boundary, so fusing re-evaluates nothing and pays only the
+    * second hop's extra candidate fan-out — bounded by the fuse
+    * threshold times the frontier's 2-hop out-degree, KBs at the tail
+    * this targets. Env-overridable for cluster profiles.
     */
   private val RddFuseBelowRows =
     sys.env.get("GRAFT_RDD_FUSE_BELOW").map(_.toLong).getOrElse(4096L)
-
-  /** Frontier sizes below this get an explicit broadcast hint in the
-    * loop (see the note in [[patchLoop]]'s subRound) — ~a few MB of ids
-    * and values, unambiguously broadcast-right. Above it the frontier
-    * takes the shuffle path and AQE decides at runtime.
-    */
-  private val FrontierBroadcastRows = 100000L
 
   /** Loop shuffle parallelism: ≈100k edges per partition, floor 4,
     * capped at the session's configured shuffle partitions. At cluster
@@ -391,243 +334,25 @@ object GraphOps {
     * partitioning can't be reused by the next round's joins, which would
     * force a state re-exchange per round) — restoring the caller's confs
     * on exit. AQE itself stays on: its runtime broadcast conversion is
-    * what keeps the per-round merge exchange-free.
+    * what keeps a DataFrame loop's per-round merge exchange-free.
     */
   private def withLoopConfs[A](session: org.apache.spark.sql.SparkSession, parts: Int)(
       body: => A): A = {
     val shuffleKey = "spark.sql.shuffle.partitions"
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val aqeKey = "spark.sql.adaptive.enabled"
     val prevShuffle = session.conf.get(shuffleKey, "200")
     val prevCoalesce = session.conf.get(coalesceKey, "true")
-    val prevAqe = session.conf.get(aqeKey, "true")
     session.conf.set(shuffleKey, parts.toString)
     session.conf.set(coalesceKey, "false")
-    sys.env.get("GRAFT_LOOP_AQE").foreach(v => session.conf.set(aqeKey, v))
     try body
     finally {
       session.conf.set(shuffleKey, prevShuffle)
       session.conf.set(coalesceKey, prevCoalesce)
-      session.conf.set(aqeKey, prevAqe)
     }
-  }
-
-  /** Shared incremental driver loop for iterate-until-converged graph
-    * algorithms (C1/A4 of the reference, `SingleSourceSP.java:439-519`,
-    * re-engineered for scale).
-    *
-    * State is base ⟕ patch: `base` is the full |V|-row table, rewritten
-    * ONLY at fold points; `patch` is the small table of rows touched
-    * since the last fold (improved value, this-round `p_upd` frontier
-    * flag, optional `p_rch` first-contact mark). Per round:
-    *
-    *   frontier = patch.filter(p_upd)            — no |V| scan at all
-    *   delta    = mkDelta(current, frontier)     — algorithm step; rows
-    *              keyed by id with `newval` (null = no improvement) and
-    *              boolean `improved`
-    *   patch'   = patch ⟗ delta                  — small ⟗ small, then
-    *              checkpointed; ONE agg materializes it and reads both
-    *              the convergence counter (the reference's Hadoop
-    *              counter, `:473-479`) and the patch size
-    *
-    * The plan depth is CONSTANT per round (one broadcast probe over the
-    * base checkpoint — deep lazy merge chains make Catalyst's optimizer
-    * cost explode exponentially, measured 2.4×/round). Long-tail
-    * convergence (hundreds of rounds, tiny frontiers — what a power-law
-    * graph produces at scale) costs O(patch) per round, not O(|V|); the
-    * total fold cost is amortized O(touched rows × 8 / |V|) full
-    * rewrites for the whole run.
-    *
-    * Superseded base/patch checkpoint blocks are freed as soon as their
-    * replacement is materialized (the reference instead leaves every
-    * iteration's full state on HDFS, `SingleSourceSP.java:513-517`).
-    * The loop is bounded by min(maxRounds, |V|−1).
-    */
-  private def patchLoop(
-      base0: DataFrame,
-      seedPatch: DataFrame => DataFrame,
-      valCol: String,
-      trackReached: Boolean,
-      maxRounds: Long)(mkDelta: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val sc = base0.sparkSession.sparkContext
-    def persistedIds = sc.getPersistentRDDs.keySet.toSet
-    def free(ids: Set[Int]): Unit = {
-      val persisted = sc.getPersistentRDDs
-      ids.foreach(id => persisted.get(id).foreach(_.unpersist(false)))
-    }
-    def ckptAfter[A](pre: Set[Int])(materialize: => A): (A, Set[Int]) = {
-      val a = materialize
-      (a, persistedIds -- pre)
-    }
-
-    // current full state view: base overlaid with the patch
-    def currentState(b: DataFrame, p: DataFrame, pRows: Long): DataFrame = {
-      val pSide = if (pRows < BroadcastRowCap) broadcast(p) else p
-      val passthrough = b.columns.filterNot(c => c == valCol || c == "reached").map(col)
-      val reached =
-        if (trackReached)
-          Seq((coalesce(col("reached"), lit(false)) || coalesce(col("p_rch"), lit(false)))
-            .as("reached"))
-        else Nil
-      b.join(pSide, Seq("id"), "left_outer")
-        .select(
-          passthrough ++ reached ++ Seq(
-            coalesce(col("p_val"), col(valCol)).as(valCol),
-            coalesce(col("p_upd"), lit(false)).as("updated")): _*)
-    }
-
-    // Eager checkpoints (the materialization doubles as the round's
-    // work-horse job; measured faster than lazy + counting action), and
-    // dropOriginStats after EVERY checkpoint: without it the size-only
-    // estimator's sizeInBytes doubles its bit-length per round (see
-    // CheckpointBridge) and the driver dies in BigInt math by round ~16.
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
-    var pre = persistedIds
-    var base = ckpt(base0)
-    val (nV, baseIds0) = ckptAfter(pre)(base.count())
-    var baseLive = baseIds0
-    pre = persistedIds
-    var patch = ckpt(seedPatch(base))
-    val (patchRows0, patchIds0) = ckptAfter(pre)(patch.count())
-    var patchLive = patchIds0
-    var patchRows = patchRows0
-
-    val bound = math.min(maxRounds, math.max(1L, nV - 1L))
-    val foldRows = math.max(1000L, nV / 8L)
-    var rounds = 0L
-    // the seed patch size doubles as the first round's frontier size:
-    // it sizes the first batch decision, and an empty seed patch (e.g.
-    // a source vertex absent from the graph) skips the loop outright —
-    // an empty-frontier round is a no-op by construction
-    var changed = patchRows0
-    // one-round frontier history for the batching decision below: a
-    // small frontier alone does NOT mean the round is cheap — every
-    // SSSP seeds with ONE row, and round 1–2 are the exponential
-    // expansion phase where a fused round re-evaluates the biggest
-    // delta of the run ~3× (measured: sssp_two_rounds 2.9→6.4 s when
-    // the seed round fused). Two consecutive small frontiers is the
-    // long-tail signature fusing was built for.
-    var prevChanged = Long.MaxValue
-    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
-    while (changed > 0 && rounds < bound) {
-      val tRound = System.nanoTime()
-      // one algorithm sub-round, composed lazily over `p`
-      def subRound(p: DataFrame): DataFrame = {
-        // the loop MEASURED the frontier size last round (`changed`), so
-        // hint the broadcast outright instead of waiting for AQE to
-        // rediscover it stage-by-stage (measured: the late-tail rounds'
-        // AQE re-planning cost 1.5 s/round on a 1-row frontier; hinted,
-        // 0.35 s). Gated well below the patch overlay's cap: a frontier
-        // this size is a few MB broadcast, while a fixed-iteration
-        // all-nodes "frontier" (pagerank) or a still-expanding 100 TB
-        // wave correctly stays on the shuffle path
-        val fr0 = p.filter(col("p_upd")).select(col("id"), col("p_val").as(valCol))
-        val frontier = if (changed < FrontierBroadcastRows) broadcast(fr0) else fr0
-        val delta = mkDelta(currentState(base, p, patchRows), frontier)
-        val reachedCols =
-          if (trackReached)
-            Seq((coalesce(col("p_rch"), lit(false)) || col("improved").isNotNull).as("p_rch"))
-          else Nil
-        p.join(delta, Seq("id"), "full_outer")
-          .select(
-            Seq(
-              col("id"),
-              coalesce(col("newval"), col("p_val")).as("p_val"),
-              coalesce(col("improved"), lit(false)).as("p_upd")) ++ reachedCols: _*)
-      }
-      // Adaptive batching (OFF by default — see [[BatchBelowRows]]):
-      // when enabled, a frontier small for TWO consecutive rounds (the
-      // converged long tail, not the small seed of a still-expanding
-      // run) fuses two sub-rounds into one materialization, trading ~3×
-      // re-evaluation of the unmaterialized intermediate for one fewer
-      // job dispatch. Measurement showed local planning/codegen — not
-      // dispatch — is the per-round floor, so the default stays 1
-      // sub-round per materialization. Deeper fusing compounds: cost
-      // grows 3^depth (measured: depth 4 tripled sssp_lineitem).
-      // Convergence stays exact either way — the final sub-round's
-      // `p_upd` flags gate the loop, and a fused no-op sub-round is
-      // idempotent.
-      val smallTail = changed < BatchBelowRows && prevChanged < BatchBelowRows
-      val batch = math.min(if (smallTail) 2L else 1L, bound - rounds)
-      prevChanged = changed
-      pre = persistedIds
-      // the round's two control scalars (patch size, convergence count)
-      // ride the checkpoint materialization itself as observed metrics —
-      // no separate count job per round (the reference instead reads a
-      // Hadoop counter after each full MR job, SingleSourceSP.java:473-479)
-      val obs = org.apache.spark.sql.Observation()
-      val pNew = ckpt(
-        (1L to batch)
-          .foldLeft(patch)((p, _) => subRound(p))
-          .observe(obs, count(lit(1)).as("rows"), count_if(col("p_upd")).as("changed")))
-      val pNewIds = persistedIds -- pre
-      // eager ckpt ran the observed plan; the listener bus posts async, so
-      // drain it first — otherwise getOrEmpty races the delivery and the
-      // explicit-count fallback fires nondeterministically, costing an
-      // extra aggregate job per round. getOrEmpty still guards API drift.
-      org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(
-        base.sparkSession.sparkContext)
-      val m = org.apache.spark.sql.graftbridge.CheckpointBridge.observedMetrics(obs)
-      if (m.nonEmpty) {
-        patchRows = m("rows").asInstanceOf[Long]
-        changed = m("changed").asInstanceOf[Long]
-      } else {
-        val row = pNew.agg(count(lit(1)), count_if(col("p_upd"))).head()
-        patchRows = row.getLong(0)
-        changed = row.getLong(1)
-      }
-      rounds += batch
-      if (patchRows >= foldRows) {
-        // fold: rewrite base with the patch applied, shrink the patch to
-        // the still-updated frontier rows
-        // ckpt is EAGER: the blocks exist when it returns, so the live-id
-        // snapshot needs no extra count job
-        pre = persistedIds
-        val base2 = ckpt(currentState(base, pNew, patchRows).drop("updated"))
-        val base2Ids = persistedIds -- pre
-        pre = persistedIds
-        val patch2 = ckpt(pNew.filter(col("p_upd")))
-        val patch2Ids = persistedIds -- pre
-        free(baseLive ++ patchLive ++ pNewIds)
-        base = base2
-        baseLive = base2Ids
-        patch = patch2
-        patchLive = patch2Ids
-        patchRows = changed
-      } else {
-        free(patchLive)
-        patch = pNew
-        patchLive = pNewIds
-      }
-      if (debug)
-        System.err.println(
-          f"[patchLoop] round=$rounds%3d changed=$changed%7d patchRows=$patchRows%7d " +
-            f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
-    }
-    currentState(base, patch, patchRows)
-  }
-
-  /** One min-label propagation round for [[connectedComponents]], in
-    * delta form: only the rows whose label improves this round.
-    */
-  def ccDelta(cur: DataFrame, frontier: DataFrame, undirected: DataFrame): DataFrame = {
-    val f = frontier.alias("f")
-    val best = f
-      .join(undirected.alias("e"), col("f.id") === col("e.src"))
-      .select(col("e.dst").as("id"), col("f.lab").as("cand"))
-      .groupBy("id")
-      .agg(min(col("cand")).as("best"))
-    cur
-      .select(col("id"), col("lab"))
-      .alias("s")
-      .join(best.alias("b"), Seq("id"))
-      .filter(col("b.best") < col("s.lab"))
-      .select(col("id"), col("b.best").as("newval"), lit(true).as("improved"))
   }
 
   /** Connected components over the UNDIRECTED closure of the edge list:
-    * iterative min-label propagation on the shared incremental loop;
+    * iterative min-label propagation on RDD rounds (the [[sssp]] shape);
     * converges in O(diameter) rounds. Labels are node ids; each node
     * ends with the minimum id in its component.
     *
@@ -3326,40 +3051,10 @@ object GraphOps {
        |SELECT a, b, sup FROM fin ORDER BY a, b""".stripMargin
   }
 
-  /** One peeling round of [[kCore]], in delta form: dead frontier nodes
-    * send a decrement per incident edge; an ALIVE neighbor's degree drops
-    * by its dead-neighbor count, and it dies in turn (p_val −1) when the
-    * new degree falls below k. Decrement rows carry `improved = false` —
-    * the patch applies the new value but only DEATHS enter the next
-    * frontier, and the loop converges when a round kills nobody. Dead
-    * nodes are filtered from the compare side, so a death cascades
-    * exactly once.
-    */
-  def kCoreDelta(cur: DataFrame, frontier: DataFrame, undirected: DataFrame, k: Int): DataFrame = {
-    val f = frontier.alias("f")
-    val decs = f
-      .join(undirected.alias("e"), col("f.id") === col("e.src"))
-      .groupBy(col("e.dst").as("id"))
-      .agg(count(lit(1)).as("dec"))
-    cur
-      .filter(col("deg") >= 0)
-      .select(col("id"), col("deg"))
-      .alias("s")
-      .join(decs.alias("d"), Seq("id"))
-      .select(
-        col("id"),
-        when(col("s.deg") - col("d.dec") < k, lit(-1L))
-          .otherwise(col("s.deg") - col("d.dec"))
-          .as("newval"))
-      .withColumn("improved", col("newval") === -1L)
-  }
-
   /** k-core decomposition: iteratively peel nodes whose degree in the
-    * surviving induced subgraph is below k, until a fixpoint. Runs on the
-    * same incremental [[patchLoop]] as SSSP/CC, but with DELETION-cascade
-    * semantics: the monotone value is the remaining degree (−1 = dead),
-    * messages are per-edge decrements, and only deaths re-enter the
-    * frontier. Returns every node of the undirected simple graph with its
+    * surviving induced subgraph is below k, until a fixpoint — the
+    * deletion cascade of [[peel]] on RDD rounds, one job per round.
+    * Returns every node of the undirected simple graph with its
     * membership flag — the densest-region filter a graph pipeline runs
     * before expensive per-node work.
     */
@@ -3367,33 +3062,102 @@ object GraphOps {
     val session = edges.sparkSession
     val parts = loopPartitions(session, edges.count() * 2)
     withLoopConfs(session, parts) {
-      // undirected simple graph (dedup'd, self-loops dropped), both
-      // directions materialized so out-degree == undirected degree
-      val simple = Phys.materialized(
-        edges
-          .filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .distinct())
-      val und = simple
-        .select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(simple.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      und.count()
-      val base0 = und
-        .groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
-      val state = patchLoop(
-        base0,
-        b =>
-          b.filter(col("deg") < k)
-            .select(col("id"), lit(-1L).as("p_val"), lit(true).as("p_upd")),
-        valCol = "deg",
-        trackReached = false,
-        maxRounds = Long.MaxValue)(kCoreDelta(_, _, und, k))
-      und.unpersist(false)
-      state.select(col("id"), (col("deg") >= 0).as("in_core"))
+      val part = new org.apache.spark.HashPartitioner(parts)
+      val adj = simpleAdjacency(edges, part)
+      val (state, _) = peel(adj, adj.mapValues(ns => dieBelow(ns.length.toLong, k)), k, part)
+      adj.unpersist(false)
+      import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+      val schema = StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("in_core", BooleanType, nullable = false)))
+      session.createDataFrame(
+        state.map { case (id, (deg, _)) => org.apache.spark.sql.Row(id, deg >= 0) },
+        schema)
     }
+  }
+
+  /** The undirected simple graph (self-loops and parallel edges dropped)
+    * as neighbor arrays keyed by node, laid out by `part` and persisted —
+    * the caller unpersists. The dedup is a DataFrame `distinct()`: an
+    * RDD distinct keyed by a pair Java-serializes every tuple.
+    */
+  private def simpleAdjacency(
+      edges: DataFrame,
+      part: org.apache.spark.HashPartitioner): org.apache.spark.rdd.RDD[(Long, Array[Long])] =
+    edges
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+      .rdd
+      .flatMap { r =>
+        val a = r.getLong(0); val b = r.getLong(1)
+        Iterator((a, b), (b, a))
+      }
+      .groupByKey(part)
+      .mapValues(_.toArray)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Peel state for a node whose degree in the surviving subgraph is
+    * `deg`: it dies at peel level `k` when `deg < k`.
+    */
+  private def dieBelow(deg: Long, k: Int): (Long, Boolean) =
+    if (deg < k) (1L - k, true) else (deg, false)
+
+  /** The deletion cascade at level `k` shared by [[kCore]] and
+    * [[corenessTable]]. The state maps each node to `(deg,
+    * diedThisRound)`: `deg ≥ 0` is a live node's degree in the
+    * surviving subgraph, and a dead node holds `1 − k` for the level
+    * whose peel killed it. Each round is one co-partitioned probe of
+    * `adj` by the nodes that died last round (one decrement per
+    * neighbor), one decrement-sum shuffle, and a narrow merge in which a
+    * live node falling below k dies. Dead nodes ignore decrements, so
+    * each death cascades exactly once. The round's death and survivor
+    * counts ride its single action, and the loop stops at the first
+    * round that kills nobody — the seed's deaths are probed by round 1,
+    * so a seed needs no action of its own. Superseded rounds are freed;
+    * the returned state is persisted, with its survivor count.
+    */
+  private def peel(
+      adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
+      seed: org.apache.spark.rdd.RDD[(Long, (Long, Boolean))],
+      k: Int,
+      part: org.apache.spark.HashPartitioner)
+      : (org.apache.spark.rdd.RDD[(Long, (Long, Boolean))], Long) = {
+    var state = seed
+    var died = 1L
+    var alive = 0L
+    while (died > 0) {
+      // state and adj share `part`, so partition i of each holds the same
+      // keys: the probe is a hash-set lookup per adjacency row, and a
+      // partition with no deaths skips its scan
+      val decs = state
+        .filter(_._2._2)
+        .zipPartitions(adj) { (dead, nbrs) =>
+          val ids = dead.map(_._1).toSet
+          if (ids.isEmpty) Iterator.empty
+          else nbrs.filter(n => ids(n._1)).flatMap(_._2.iterator.map(n => (n, 1L)))
+        }
+        .reduceByKey(part, _ + _)
+      val merged = state
+        .leftOuterJoin(decs, part)
+        .mapValues {
+          case ((deg, _), Some(dec)) if deg >= 0 => dieBelow(deg - dec, k)
+          case ((deg, _), _) => (deg, false)
+        }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val (d, a) = merged
+        .mapPartitions { it =>
+          var d = 0L; var a = 0L
+          it.foreach { case (_, (deg, now)) => if (now) d += 1; if (deg >= 0) a += 1 }
+          Iterator.single((d, a))
+        }
+        .reduce((x, y) => (x._1 + y._1, x._2 + y._2))
+      state.unpersist(false)
+      state = merged
+      died = d
+      alive = a
+    }
+    (state, alive)
   }
 
   /** Katz centrality (Katz 1953) in exact integer milli-units: the
@@ -3791,20 +3555,17 @@ object GraphOps {
   /** Full k-core DECOMPOSITION: every node's core number (degeneracy
     * rank — the strongest cohesion measure cheaper than truss), not
     * just membership at one k ([[kCore]]). Uses the nesting property
-    * (the (k+1)-core ⊆ k-core): `coreness(v) = 1 + Σ_{k=2..K}
-    * [v ∈ k-core]`, so the table is a join of the [[kCore]] runs —
-    * each an independent deletion-cascade loop over the shared
-    * incremental patchLoop, integer-exact and engine-deterministic.
+    * (the (k+1)-core ⊆ k-core): the peels run for k = 2, 3, … in turn,
+    * and a node that dies in the peel at k has core number k − 1 —
+    * the `1 − k` [[peel]] leaves in its state. Integer-exact and
+    * engine-deterministic.
     *
-    * Scale shape: K−1 SEQUENTIAL peel loops over a SHRINKING graph —
-    * the nesting property cuts both ways: the k-core of G is the
-    * k-core of the (k−1)-core's induced subgraph, so each peel starts
-    * from the previous survivors' edges instead of the full graph,
-    * and the undirected materialization is paid once, not K−1 times.
-    * On the harness graph the k = 2 cascade dominates (its input is
-    * the full graph either way — measured ≈ flat at sf0.1 under
-    * ambient load), but on a graph whose cores shrink early the
-    * restart-from-survivors form is the one that survives 100×. The
+    * Scale shape: K−1 SEQUENTIAL peels, each restarting from the
+    * previous survivors — the k-core of G is the k-core of the
+    * (k−1)-core's induced subgraph, and a survivor's state degree IS
+    * its degree in that subgraph, so the next peel seeds from the state
+    * alone: the adjacency is built once, never rewritten per k, and a
+    * dead node's row is probed only in the round it dies. The
     * sequential bucket-peel (Matula–Beck) is O(E) on one machine but
     * inherently serial; the per-k cascade form is what distributes.
     *
@@ -3813,53 +3574,38 @@ object GraphOps {
     */
   def corenessTable(edges: DataFrame, maxK: Int = CorenessMaxK): DataFrame = {
     val session = edges.sparkSession
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
     val parts = loopPartitions(session, edges.count() * 2)
     withLoopConfs(session, parts) {
-      val simple = Phys.materialized(
-        edges
-          .filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .distinct())
-      var und = ckpt(
-        simple
-          .select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(simple.select(col("b").as("src"), col("a").as("dst")))
-          .repartition(parts, col("src")))
-      var result =
-        ckpt(und.select(col("src").as("id")).distinct().withColumn("coreness", lit(1L)))
+      val part = new org.apache.spark.HashPartitioner(parts)
+      val adj = simpleAdjacency(edges, part)
+      // the 1-core: every node of the simple graph, at its full degree
+      var state = adj.mapValues(ns => (ns.length.toLong, false))
       var k = 2
       var survivors = -1L
       while (k <= maxK && survivors != 0L) {
-        val base0 = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
         val kk = k
-        val state = patchLoop(
-          base0,
-          b =>
-            b.filter(col("deg") < kk)
-              .select(col("id"), lit(-1L).as("p_val"), lit(true).as("p_upd")),
-          valCol = "deg",
-          trackReached = false,
-          maxRounds = Long.MaxValue)(kCoreDelta(_, _, und, kk))
-        val core = ckpt(state.filter(col("deg") >= 0).select(col("id")))
-        survivors = core.count()
-        if (survivors > 0L) {
-          result = ckpt(
-            result
-              .join(core.withColumn("inc", lit(1L)), Seq("id"), "left_outer")
-              .select(col("id"), (col("coreness") + coalesce(col("inc"), lit(0L))).as("coreness")))
-          und = ckpt(
-            und
-              .join(core.select(col("id").as("src")), Seq("src"), "left_semi")
-              .join(core.select(col("id").as("dst")), Seq("dst"), "left_semi"))
-        }
+        val prev = state
+        val (next, alive) = peel(
+          adj,
+          prev.mapValues { case s @ (deg, _) => if (deg >= 0) dieBelow(deg, kk) else s },
+          kk,
+          part)
+        prev.unpersist(false)
+        state = next
+        survivors = alive
         k += 1
       }
+      adj.unpersist(false)
       require(
         survivors == 0L,
         s"non-empty $maxK-core: the graph's degeneracy outgrew CorenessMaxK — raise the cap")
-      result
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      val schema = StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("coreness", LongType, nullable = false)))
+      session.createDataFrame(
+        state.map { case (id, (deg, _)) => org.apache.spark.sql.Row(id, -deg) },
+        schema)
     }
   }
 
@@ -4482,7 +4228,7 @@ object GraphOps {
           // Contract: the chosen pseudo-forest has ≤ one edge per LIVE
           // component, so this CC input is bounded by the (halving)
           // component count, not by |E|. (Measured: min-label beats the
-          // star contraction here — patchLoop's shrinking frontier keeps
+          // star contraction here — the changed-label frontier keeps
           // the propagation rounds cheap, while stars pay two full
           // groupBy/join/distinct passes per round.)
           val comp =

@@ -192,6 +192,22 @@ class GraphOpsSpec extends SparkSpec {
     assert(out === Map(1L -> false, 2L -> false))
   }
 
+  test("kCore and corenessTable free what they persist: at most the returned state stays") {
+    // K4 with a pendant chain: a four-round cascade at k = 2 and three
+    // peel levels, so a leak per round or per level would show
+    val k4 = for { a <- 1L to 4L; b <- (a + 1) to 4L } yield (a, b, 1.0)
+    val chain = Seq((4L, 5L, 1.0), (5L, 6L, 1.0), (6L, 7L, 1.0), (7L, 8L, 1.0))
+    val g = edgesDf(k4 ++ chain)
+    val sc = spark.sparkContext
+    Seq("kCore" -> (() => GraphOps.kCore(g, k = 2)), "corenessTable" -> (() => GraphOps.corenessTable(g)))
+      .foreach { case (name, run) =>
+        val before = sc.getPersistentRDDs.keySet
+        run().collect()
+        val added = sc.getPersistentRDDs.keySet -- before
+        assert(added.size <= 1, s"$name left persisted RDDs ${added.toSeq.sorted}")
+      }
+  }
+
   test("sssp on an empty edge list returns an empty result") {
     assert(GraphOps.sssp(edgesDf(Seq.empty), 1L).count() === 0)
   }

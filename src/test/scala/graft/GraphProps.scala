@@ -48,6 +48,46 @@ object GraphProps extends Properties("graph") {
     dist.toMap
   }
 
+  /** Core numbers by the sequential min-degree peel (Matula–Beck) over
+    * the undirected simple graph: remove a node of least remaining
+    * degree; its core number is the largest such degree seen so far.
+    */
+  private def sequentialCoreness(edges: Seq[(Long, Long, Double)]): Map[Long, Long] = {
+    val adj = edges
+      .filter(e => e._1 != e._2)
+      .flatMap(e => Seq(e._1 -> e._2, e._2 -> e._1))
+      .groupBy(_._1)
+      .map { case (v, ps) => v -> ps.map(_._2).toSet }
+    val deg = collection.mutable.Map(adj.map { case (v, ns) => v -> ns.size.toLong }.toSeq: _*)
+    val core = collection.mutable.Map[Long, Long]()
+    var level = 0L
+    while (deg.nonEmpty) {
+      val (v, d) = deg.minBy(_.swap)
+      level = math.max(level, d)
+      core(v) = level
+      deg -= v
+      adj(v).foreach(n => deg.get(n).foreach(dn => deg(n) = dn - 1))
+    }
+    core.toMap
+  }
+
+  property("kCore and corenessTable equal a sequential peel") = forAll(genGraph) { edges =>
+    edges.isEmpty || {
+      import spark.implicits._
+      val df = edges.toDF("src", "dst", "w")
+      val core = sequentialCoreness(edges)
+      // at most 30 nodes, so no core number reaches 30
+      val coreness = GraphOps.corenessTable(df, maxK = 30)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val wrongK = Seq(2, 3).filter { k =>
+        val got = GraphOps.kCore(df, k).collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+        got != core.map { case (v, c) => v -> (c >= k) }
+      }
+      Prop(coreness == core && wrongK.isEmpty) :|
+        s"coreness=$coreness expected=$core kCore wrong at k=$wrongK"
+    }
+  }
+
   property("sssp equals Dijkstra; membership = sources ∪ reached") = forAll(genGraph) { edges =>
     edges.isEmpty || {
       import spark.implicits._
